@@ -127,11 +127,6 @@ def main() -> None:
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    # Hot-table cache: every headline query re-reads the same handful of
-    # tables, so share one Spark-cached DataFrame per table across the
-    # run (the local-mode equivalent of a cluster's cached hot views;
-    # see sources/tables.py). Must be set before the first load_table.
-    os.environ["SPARK_GRAFT_CACHE_TABLES"] = "1"
     from market_insights_app_spark.plans.registry import QUERIES
     from market_insights_app_spark.session import get_spark
     from market_insights_app_spark.sources.tables import load_table
@@ -165,8 +160,8 @@ def main() -> None:
         df.write.mode("overwrite").format("noop").save()
         return time.perf_counter() - t0
 
-    # warmup: JVM + codegen, and materialize the hot-table cache once
-    # (untimed) so timed runs measure query compute, not parquet decode.
+    # warmup: JVM + codegen, and one untimed scan of every table so the
+    # first timed query does not pay the cold file-system reads.
     # (warmup query was recent_n_tail until its r13 registry
     # retirement; prices_filter_range_limit is the same fixed-overhead
     # sort+limit read shape)

@@ -24,8 +24,7 @@ __version__ = "0.1.0"
 
 # Pin BLAS/OpenMP thread pools to 1 BEFORE any in-package module can
 # `import numpy`: OpenBLAS binds its pool size when the shared library
-# loads, so the equivalent pin in session.get_spark() (kept, for
-# workers spawned later and real-cluster executorEnv) is too late for
+# loads, so a pin set in session.get_spark() would be too late for
 # the DRIVER process — bench.py imports the plan registry (→ operators
 # → numpy) before it ever builds a session, leaving driver-side numpy
 # matmuls running ncpu OpenBLAS threads against the 32 local executor
@@ -33,13 +32,16 @@ __version__ = "0.1.0"
 # 1.4–12.8 s unpinned in-driver vs ~0.05 s single-threaded — the same
 # 46× oversubscription collapse session.py documents for workers.
 # setdefault: an explicit user/operator setting always wins.
+# get_spark() forwards the same values to executors as
+# spark.executorEnv.* pins.
 import os as _os
 
-for _var in (
+BLAS_THREAD_ENV = (
     "OPENBLAS_NUM_THREADS",
     "OMP_NUM_THREADS",
     "MKL_NUM_THREADS",
     "NUMEXPR_NUM_THREADS",
-):
+)
+for _var in BLAS_THREAD_ENV:
     _os.environ.setdefault(_var, "1")
 del _os, _var

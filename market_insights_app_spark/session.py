@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from market_insights_app_spark import BLAS_THREAD_ENV
+
 
 def get_spark(
     app_name: str = "market-insights-spark",
@@ -32,25 +34,13 @@ def get_spark(
     # 137.9 s when 32 unpinned processes run one each (46× per-task
     # inflation; 1-min loadavg hit ~1000), which is exactly the
     # 557-vs-62 s regression the r13 1M-vector semdedup probe caught.
-    # setdefault: an explicit user/operator setting wins.  Workers
-    # inherit the env via the JVM gateway (captured when THIS builder
-    # creates the JVM — same caveat as driver.memory); executorEnv
-    # carries the same pin to real cluster executors.
-    for var in (
-        "OPENBLAS_NUM_THREADS",
-        "OMP_NUM_THREADS",
-        "MKL_NUM_THREADS",
-        "NUMEXPR_NUM_THREADS",
-    ):
-        os.environ.setdefault(var, "1")
+    # The package __init__ (run by importing this module) has already
+    # set each var unless the user set it first.  Workers inherit the
+    # env via the JVM gateway (captured when THIS builder creates the
+    # JVM — same caveat as driver.memory); executorEnv carries the same
+    # pin to real cluster executors.
     blas_pins = {
-        f"spark.executorEnv.{var}": os.environ[var]
-        for var in (
-            "OPENBLAS_NUM_THREADS",
-            "OMP_NUM_THREADS",
-            "MKL_NUM_THREADS",
-            "NUMEXPR_NUM_THREADS",
-        )
+        f"spark.executorEnv.{var}": os.environ[var] for var in BLAS_THREAD_ENV
     }
     builder = (
         SparkSession.builder.appName(app_name)

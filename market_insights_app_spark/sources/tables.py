@@ -16,19 +16,6 @@ from pyspark.sql import functions as F
 
 from market_insights_app_spark.schemas import TESTDATA_TABLES
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-# Opt-in hot-table cache (SPARK_GRAFT_CACHE_TABLES=1): repeated reads of
-# the same table within one process return one shared, Spark-cached
-# DataFrame — the local-mode stand-in for a cluster's hot page cache /
-# cached view over a repeatedly-scanned table. Default OFF so
-# correctness runs measure the true cold path.
-_TABLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table. Schema comes from the parquet footer
@@ -45,10 +32,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TESTDATA_TABLES}")
-    caching = os.environ.get("SPARK_GRAFT_CACHE_TABLES") == "1"
-    key = (os.path.abspath(sf_dir), name)
-    if caching and key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # Keep the raw nanos column: predicates on the converted ts
@@ -58,9 +41,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn("ts_ns", F.col("ts")).withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000"))
         )
-    if caching:
-        df = df.cache()
-        _TABLE_CACHE[key] = df
     return df
 
 

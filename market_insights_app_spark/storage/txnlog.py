@@ -19,7 +19,9 @@ VLDB 2020 — re-implemented from the paper's ideas, no Delta code):
   entry is complete the instant it is visible.  Exactly one writer
   wins a version; losers detect the collision and either REBASE
   (key-disjoint winner — bump the version and re-publish the same
-  rewrite) or RETRY (re-run the merge against the new snapshot).
+  rewrite) or RETRY (re-run the write against the new snapshot).
+  Every write operation goes through the one optimistic loop,
+  ``TxnTable._commit_loop``.
 * Snapshot isolation: a reader resolves a version once and reads only
   the files that version references; concurrent commits are invisible.
   Time travel = resolving an older version (until `vacuum`).
@@ -41,10 +43,12 @@ Honest scope:
   guarantee — exactly the documented Delta-on-S3 caveat — so the
   constructor rejects ``://`` URIs rather than silently weakening the
   contract.
-* The table schema is FIXED at the first commit; schema evolution
-  (add/rename/widen) is out of scope — a merge whose update set's
-  columns differ from the table's fails in ``unionByName`` rather
-  than silently corrupting the layout.
+* The first commit records the table schema, and every commit carries
+  the schema its version reads under.  A merge or append whose columns
+  differ from the table's fails loudly unless it passes
+  ``evolve_schema=True``, which adds new columns and widens shared ones
+  through Spark's union promotion (time travel keeps each version's
+  own shape).  Renaming or dropping a column is out of scope.
 * ``last_txn`` scans the log newest-first (driver-side JSON); a
   production deployment would fold per-app watermarks into the
   checkpoint."""
@@ -60,6 +64,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LOG_DIR = "_txn_log"
 DATA_DIR = "data"
@@ -98,6 +103,31 @@ def _stat_value(v):
         # ISO-8601 compares lexicographically in chronological order
         return v.isoformat()
     return None
+
+
+def _range_overlaps(s: dict, lo, hi) -> bool:
+    """Whether the recorded [min, max] range ``s`` can meet [lo, hi].
+    Stats of mixed types (schema drift) do not compare: never prune."""
+    try:
+        return not (s["max"] < lo or s["min"] > hi)
+    except TypeError:
+        return True
+
+
+def _struct(schema_json: str) -> StructType:
+    return StructType.fromJson(json.loads(schema_json))
+
+
+def _data_root(d: str) -> str:
+    """The physical directory holding add-entry dir ``d``: an optimize
+    commit's per-bucket entries share one ``data/<uuid>`` root."""
+    return "/".join(d.split("/")[:2])
+
+
+def _keep(add: list[dict]) -> None:
+    """``on_stale`` for adds that do not depend on the snapshot (data
+    written before the commit loop, or a restore's existing
+    directories): the next build reuses them, so nothing is dropped."""
 
 
 @dataclass
@@ -170,69 +200,58 @@ class TxnTable:
         with open(os.path.join(self._log_path(), _fmt_version(v))) as fh:
             return json.load(fh)
 
-    def _publish(self, version: int, payload: dict) -> bool:
-        """Atomically publish commit `version`.  True iff this writer
-        won the version.  The temp file is fully written and fsynced
-        before the link, so a visible log entry is always complete."""
+    def _link_new(self, name: str, body: dict) -> bool:
+        """Atomically create log file `name` holding `body`.  True iff
+        this call created it.  The temp file is written, flushed and
+        fsynced BEFORE the fail-if-exists link, so a visible log file
+        is always complete, even after an OS crash."""
         log = self._log_path()
         tmp = os.path.join(log, f".tmp-{uuid.uuid4().hex}")
-        final = os.path.join(log, _fmt_version(version))
         with open(tmp, "w") as fh:
-            json.dump(payload, fh)
+            json.dump(body, fh)
             fh.flush()
             os.fsync(fh.fileno())
         try:
-            os.link(tmp, final)  # atomic fail-if-exists publication
+            os.link(tmp, os.path.join(log, name))
             return True
         except FileExistsError:
             return False
         finally:
             os.unlink(tmp)
 
-    def _maybe_checkpoint(self, snap_after: Snapshot) -> None:
-        """Write the full live map every `checkpoint_interval` commits.
-        Replay is deterministic, so two writers racing on the same
-        checkpoint write identical content — the loser's FileExists is
-        benign."""
-        v = snap_after.version
-        if v < 0 or (v + 1) % self.checkpoint_interval != 0:
-            return
-        self._force_checkpoint(snap_after)
+    def _publish(self, version: int, payload: dict) -> bool:
+        """Atomically publish commit `version`.  True iff this writer
+        won the version."""
+        return self._link_new(_fmt_version(version), payload)
 
     def _force_checkpoint(self, snap: Snapshot) -> None:
-        """Write the full live map for `snap` unconditionally.  Replay
-        is deterministic, so racing writers produce identical content —
-        the loser's FileExists is benign."""
-        log = self._log_path()
-        tmp = os.path.join(log, f".tmp-{uuid.uuid4().hex}")
-        final = os.path.join(log, f"checkpoint-{snap.version:0{_V_WIDTH}d}.json")
-        body = {
-            "version": snap.version,
-            "files": snap.files,
-            "schema": snap.schema_json,
-            "constraints": snap.constraints,
+        """Write the full live map for `snap`.  Replay is deterministic,
+        so racing writers produce identical content — losing the link
+        race is benign."""
+        self._link_new(
+            f"checkpoint-{snap.version:0{_V_WIDTH}d}.json",
+            {
+                "version": snap.version,
+                "files": snap.files,
+                "schema": snap.schema_json,
+                "constraints": snap.constraints,
+            },
+        )
+
+    def _checkpoints(self) -> dict[int, str]:
+        """Checkpoint version -> file name, for every checkpoint in the log."""
+        return {
+            int(f[len("checkpoint-") : -len(".json")]): f
+            for f in os.listdir(self._log_path())
+            if f.startswith("checkpoint-") and f.endswith(".json")
         }
-        with open(tmp, "w") as fh:
-            json.dump(body, fh)
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
-            pass
-        finally:
-            os.unlink(tmp)
 
     def _latest_checkpoint(self, upto: int) -> dict | None:
-        best = None
-        for f in os.listdir(self._log_path()):
-            if f.startswith("checkpoint-") and f.endswith(".json"):
-                v = int(f[len("checkpoint-") : -len(".json")])
-                if v <= upto and (best is None or v > best):
-                    best = v
-        if best is None:
+        cps = self._checkpoints()
+        covered = [v for v in cps if v <= upto]
+        if not covered:
             return None
-        with open(
-            os.path.join(self._log_path(), f"checkpoint-{best:0{_V_WIDTH}d}.json")
-        ) as fh:
+        with open(os.path.join(self._log_path(), cps[max(covered)])) as fh:
             return json.load(fh)
 
     def snapshot(self, version: int | None = None) -> Snapshot:
@@ -320,123 +339,96 @@ class TxnTable:
                 entry["stats"] = {"col": stats_col, "min": lo, "max": hi}
         return entry
 
-    def _write_clustered(
-        self, df: DataFrame, cluster_col: str, n_buckets: int
+    def _write_bucketed(
+        self, assigned: DataFrame, part: str, cols: list[str], multi: bool
     ) -> list[dict]:
-        """Write `df` as ONE physical directory holding `n_buckets`
-        range-clustered subdirectories (``__bucket=i``), and return one
-        add-entry per subdirectory with its own disjoint key-range
-        stats.  One write job + one grouped footer-scan job — never a
-        job per bucket.  `repartitionByRange` gives each partition a
-        disjoint slice of the cluster key's order, so the per-bucket
-        min/max stats are disjoint by construction — the layout that
-        makes every later key-confined MERGE rewrite O(1) buckets."""
-        if "__bucket" in df.columns:
-            raise ValueError("column name __bucket is reserved by optimize()")
+        """Write `assigned` — every row tagged with a bucket id in
+        column `part` — as ONE physical directory holding one
+        ``<part>=i`` subdirectory per bucket, and return one add-entry
+        per bucket.  One write job + one grouped footer-scan job, never
+        a job per bucket.  Each entry's ``stats`` is its range of
+        ``cols[0]`` (what 1-D pruned merges/deletes read); with `multi`
+        it also carries ``stats_multi``, its range of every column in
+        `cols` (what multi-dimension pruning reads).  Stats come from
+        the WRITTEN files: a range repartition re-samples its
+        boundaries per action, so a second evaluation of `assigned`
+        could bucket rows differently."""
         rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
         full = os.path.join(self.path, rel)
-        (
-            df.repartitionByRange(n_buckets, F.col(cluster_col))
-            .withColumn("__bucket", F.spark_partition_id())
-            .write.mode("errorifexists")
-            .partitionBy("__bucket")
-            .parquet(full)
-        )
-        back = self.spark.read.parquet(full)
-        rows = back.groupBy("__bucket").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(cluster_col).alias("lo"),
-            F.max(cluster_col).alias("hi"),
-        ).collect()
-        entries = []
-        for r in sorted(rows, key=lambda r: r["__bucket"]):
-            lo, hi = _stat_value(r["lo"]), _stat_value(r["hi"])
-            e: dict = {"dir": f"{rel}/__bucket={r['__bucket']}", "rows": r["n"]}
-            if lo is not None and hi is not None:
-                e["stats"] = {"col": cluster_col, "min": lo, "max": hi}
-            entries.append(e)
-        return entries
-
-    def _write_zordered(
-        self, df: DataFrame, cols: list[str], n_buckets: int
-    ) -> list[dict]:
-        """Write ``df`` as ONE physical directory of ``n_buckets``
-        Z-order-clustered subdirectories and return one add-entry per
-        subdirectory carrying BOTH the primary-column range (``stats``
-        — what 1-D pruned merges/deletes read) and per-dimension
-        ranges for every z-order column (``stats_multi`` — what
-        multi-dimension pruning reads).  One write job + one grouped
-        footer-scan job, same contract as :meth:`_write_clustered` with
-        the Morton curve instead of a 1-D range."""
-        from market_insights_app_spark.operators.layout import zorder_assign
-
-        if "__file" in df.columns:
-            raise ValueError("column name __file is reserved by optimize_zorder()")
-        rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
-        full = os.path.join(self.path, rel)
-        (
-            zorder_assign(df, cols, n_buckets)
-            .write.mode("errorifexists")
-            .partitionBy("__file")
-            .parquet(full)
-        )
-        back = self.spark.read.parquet(full)
+        assigned.write.mode("errorifexists").partitionBy(part).parquet(full)
         aggs = [F.count(F.lit(1)).alias("n")]
         for c in cols:
             aggs += [F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}")]
-        rows = back.groupBy("__file").agg(*aggs).collect()
+        rows = self.spark.read.parquet(full).groupBy(part).agg(*aggs).collect()
         entries = []
-        for r in sorted(rows, key=lambda r: r["__file"]):
-            e: dict = {"dir": f"{rel}/__file={r['__file']}", "rows": r["n"]}
-            multi = {}
+        for r in sorted(rows, key=lambda r: r[part]):
+            e: dict = {"dir": f"{rel}/{part}={r[part]}", "rows": r["n"]}
+            ranges = {}
             for c in cols:
                 lo, hi = _stat_value(r[f"__lo_{c}"]), _stat_value(r[f"__hi_{c}"])
                 if lo is not None and hi is not None:
-                    multi[c] = {"min": lo, "max": hi}
-            if multi:
-                e["stats_multi"] = multi
-                c0 = cols[0]
-                if c0 in multi:
-                    e["stats"] = {"col": c0, **multi[c0]}
+                    ranges[c] = {"min": lo, "max": hi}
+            if multi and ranges:
+                e["stats_multi"] = ranges
+            if cols[0] in ranges:
+                e["stats"] = {"col": cols[0], **ranges[cols[0]]}
             entries.append(e)
         return entries
 
-    def _check_constraints(self, df: DataFrame, constraints: dict[str, str]) -> None:
+    def _check_constraints(
+        self, df: DataFrame, constraints: dict[str, str], seen: set | None = None
+    ) -> None:
         """Raise :class:`ConstraintViolation` if any row of ``df``
         fails a CHECK expression.  SQL CHECK semantics: a row violates
         only when the expression evaluates to FALSE — NULL passes (the
         standard's unknown-is-accepted rule; spell NOT NULL explicitly
         as ``col IS NOT NULL``).  Fast path is ONE probe job that
         stops at the first violating row across all constraints; the
-        per-constraint attribution job runs only on the error path."""
-        if not constraints:
+        per-constraint attribution job runs only on the error path.
+        ``seen`` holds the constraint sets one write already passed, so
+        a rebuild re-validates only when the set changed."""
+        key = json.dumps(constraints, sort_keys=True)
+        if not constraints or (seen is not None and key in seen):
             return
         viol = " OR ".join(
             f"NOT coalesce(({e}), true)" for e in constraints.values()
         )
-        if not df.filter(F.expr(viol)).limit(1).collect():
-            return
-        names = [
-            n
-            for n, e in constraints.items()
-            if df.filter(F.expr(f"NOT coalesce(({e}), true)")).limit(1).collect()
-        ]
-        raise ConstraintViolation(
-            f"rows violate CHECK constraint(s) {names} on {self.path}"
+        if df.filter(F.expr(viol)).limit(1).collect():
+            names = [
+                n
+                for n, e in constraints.items()
+                if df.filter(F.expr(f"NOT coalesce(({e}), true)")).limit(1).collect()
+            ]
+            raise ConstraintViolation(
+                f"rows violate CHECK constraint(s) {names} on {self.path}"
+            )
+        if seen is not None:
+            seen.add(key)
+
+    def _evolved_schema(self, base_json: str, df: DataFrame) -> str:
+        """Spark's own union promotion of (table schema, `df`): new
+        columns join, shared columns may widen (e.g. int→long), and
+        older directories read back null-filled/widened under it."""
+        return (
+            self.spark.createDataFrame([], _struct(base_json))
+            .unionByName(df.limit(0), allowMissingColumns=True)
+            .schema.json()
         )
 
     def _drop_data(self, rel: str) -> None:
         shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
 
-    def _read_dirs(self, dirs: list[str], schema_json: str | None) -> DataFrame:
-        from pyspark.sql.types import StructType
+    def _drop_adds(self, add: list[dict]) -> None:
+        """Default ``on_stale``: the adds were written against a stale
+        snapshot, so drop their physical directories."""
+        for root in {_data_root(a["dir"]) for a in add}:
+            self._drop_data(root)
 
+    def _read_dirs(self, dirs: list[str], schema_json: str | None) -> DataFrame:
         if not dirs:
             if schema_json is None:
                 raise ValueError("empty table with no recorded schema")
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(schema_json))
-            )
+            return self.spark.createDataFrame([], _struct(schema_json))
         paths = [os.path.join(self.path, d) for d in dirs]
         if schema_json is not None:
             # read under the SNAPSHOT's recorded schema: after a
@@ -445,9 +437,7 @@ class TxnTable:
             # null-fills them (per-file pruning still applies), and
             # time travel to a pre-evolution version keeps the old
             # schema because its snapshot records the old JSON
-            return self.spark.read.schema(
-                StructType.fromJson(json.loads(schema_json))
-            ).parquet(*paths)
+            return self.spark.read.schema(_struct(schema_json)).parquet(*paths)
         return self.spark.read.parquet(*paths)
 
     def read(self, version: int | None = None) -> DataFrame:
@@ -464,20 +454,22 @@ class TxnTable:
         self,
         op: str,
         build,  # Snapshot -> (add_entries, remove_dirs) ; data already written
-        rebase_safe,  # (our (add,remove), winning commit dict) -> bool
         max_retries: int,
-        on_stale=None,  # add_entries -> None: reclaim snapshot-dependent data
+        rebase_safe=None,  # (our (add, remove), winning commit) -> bool; None: never
+        on_stale=None,  # add_entries -> None; None: drop their directories
         schema_json: str | None = None,  # fallback when the table is new
         txn: tuple[str, int] | None = None,  # (app, id) idempotence marker
         schema_from=None,  # () -> json | None: evolved schema set by build
-        extra: dict | None = None,  # additional payload fields (constraints)
+        extra=None,  # () -> dict: additional payload fields (constraints)
     ) -> int:
-        """Shared optimistic-concurrency loop.  `build` runs against a
-        fresh snapshot and returns the rewrite; on a lost publish the
-        winning commit is examined — if it satisfies `rebase_safe` the
-        same rewrite is re-published at a higher version (no data
-        re-written, no re-read), else `on_stale` reclaims the
-        snapshot-dependent data directories and `build` re-runs."""
+        """The one optimistic-concurrency loop every write goes
+        through, and the only code that builds a commit payload.
+        `build` runs against a fresh snapshot and returns the rewrite;
+        on a lost publish the winning commit is examined — if it
+        satisfies `rebase_safe` the same rewrite is re-published at a
+        higher version (no data re-written, no re-read), else
+        `on_stale` reclaims the snapshot-dependent data directories
+        and `build` re-runs."""
         attempts = 0
         while attempts < max_retries:
             snap = self.snapshot()
@@ -499,12 +491,13 @@ class TxnTable:
             }
             if txn is not None:
                 payload["txn"] = {"app": txn[0], "id": txn[1]}
-            if extra:
-                payload.update(extra() if callable(extra) else extra)
+            if extra is not None:
+                payload.update(extra())
             while attempts < max_retries:
                 attempts += 1
                 if self._publish(version, payload):
-                    self._maybe_checkpoint(self.snapshot(version))
+                    if (version + 1) % self.checkpoint_interval == 0:
+                        self._force_checkpoint(self.snapshot(version))
                     return version
                 try:
                     winner = self._read_commit(version)
@@ -522,15 +515,13 @@ class TxnTable:
                     # rebase would publish rows never validated against
                     # the new constraints — rebuild and re-validate
                     and "constraints" not in winner
+                    and rebase_safe is not None
                     and rebase_safe((add, remove), winner)
                 ):
                     version += 1
                     payload = {**payload, "version": version}
                     continue
-                if on_stale is not None:
-                    on_stale(add)
-                break
-            else:
+                (on_stale or self._drop_adds)(add)
                 break
         raise CommitConflict(
             f"lost {max_retries} optimistic commits on {self.path} ({op})"
@@ -539,7 +530,8 @@ class TxnTable:
     def append(self, df: DataFrame, stats_col: str | None = None,
                max_retries: int = 20, evolve_schema: bool = False) -> int:
         """Blind INSERT: no table read, conflicts never invalidate the
-        write — every lost race simply rebases to the next version.
+        write — a lost race rebases to the next version unless the
+        winner changed the schema or the CHECK set, which rebuilds.
         The add carries the DataFrame's own schema so the first commit
         defines the table.
 
@@ -549,94 +541,67 @@ class TxnTable:
         int→long; earlier directories read back null-filled/widened
         under the explicit-schema read), and a frame MISSING nullable
         table columns commits with those columns null-filled on read.
-        Recomputed per retry against the fresh snapshot, so a lost
+        Recomputed per rebuild against the fresh snapshot, so a lost
         race against another schema-changing writer still evolves
         from the winning schema."""
         entry = self._write_data(df, stats_col)
-        schema_json = df.schema.json()
-        attempts = 0
-        checked_sets: set[str] = set()
-        while attempts < max_retries:
-            snap = self.snapshot()
-            # enforce CHECK constraints against THIS snapshot's set;
-            # re-snapshotting every iteration means a constraint that
-            # lands mid-race is re-validated, never bypassed by rebase.
-            # Validate under the schema the data will READ back with
-            # (evolve-appends missing a constrained evolved column are
-            # null-filled → NULL passes CHECK, the same verdict a later
-            # reader reaches; a raw read would AnalysisException on the
-            # absent column instead)
-            cfp = json.dumps(snap.constraints, sort_keys=True)
-            if snap.constraints and cfp not in checked_sets:
-                read_schema = None
-                if evolve_schema and snap.schema_json is not None:
-                    from pyspark.sql.types import StructType
+        own_json = df.schema.json()
+        state: dict = {}
+        checked: set[str] = set()
 
-                    base = StructType.fromJson(json.loads(snap.schema_json))
-                    read_schema = (
-                        self.spark.createDataFrame([], base)
-                        .unionByName(df.limit(0), allowMissingColumns=True)
-                        .schema.json()
-                    )
-                try:
+        def build(snap: Snapshot):
+            evolved = None
+            try:
+                if snap.schema_json is not None and snap.schema_json != own_json:
+                    if evolve_schema:
+                        evolved = self._evolved_schema(snap.schema_json, df)
+                    else:
+                        # the module contract is fail-loud on divergence:
+                        # an unchecked mismatched append would commit
+                        # fine and _read_dirs' explicit-schema read would
+                        # then silently null-fill missing columns and
+                        # drop extra ones.  Compare name->type sets
+                        # (parquet + explicit-schema read matches by
+                        # NAME, so column order is harmless; nullability
+                        # is advisory in parquet and Spark frames flip
+                        # it freely)
+                        shape = lambda st: sorted(  # noqa: E731
+                            ((f.name, f.dataType) for f in st.fields),
+                            key=lambda t: t[0],
+                        )
+                        base = _struct(snap.schema_json)
+                        if shape(df.schema) != shape(base):
+                            raise ValueError(
+                                "append frame schema diverges from the table's "
+                                f"recorded schema: table {shape(base)}, frame "
+                                f"{shape(df.schema)}"
+                            )
+                if snap.constraints:
+                    # enforce CHECK constraints against THIS snapshot's
+                    # set; a winner that changed the set forces a
+                    # rebuild, so a constraint that lands mid-race is
+                    # re-validated, never bypassed by rebase.  Validate
+                    # under the schema the data will READ back with
+                    # (evolve-appends missing a constrained evolved
+                    # column are null-filled → NULL passes CHECK, the
+                    # same verdict a later reader reaches; a raw read
+                    # would AnalysisException on the absent column)
                     self._check_constraints(
-                        self._read_dirs([entry["dir"]], read_schema),
+                        self._read_dirs([entry["dir"]], evolved),
                         snap.constraints,
+                        checked,
                     )
-                except ConstraintViolation:
-                    self._drop_data(entry["dir"])
-                    raise
-                checked_sets.add(cfp)
-            evolved_json: str | None = None
-            if (evolve_schema and snap.schema_json is not None
-                    and snap.schema_json != schema_json):
-                from pyspark.sql.types import StructType
+            except (ConstraintViolation, ValueError):
+                self._drop_data(entry["dir"])
+                raise
+            state["schema"] = evolved
+            return [entry], []
 
-                base = StructType.fromJson(json.loads(snap.schema_json))
-                evolved_json = (
-                    self.spark.createDataFrame([], base)
-                    .unionByName(df.limit(0), allowMissingColumns=True)
-                    .schema.json()
-                )
-            elif snap.schema_json is not None and snap.schema_json != schema_json:
-                # the module contract is fail-loud on divergence: an
-                # unchecked mismatched append would commit fine and
-                # _read_dirs' explicit-schema read would then silently
-                # null-fill missing columns and drop extra ones
-                from pyspark.sql.types import StructType
-
-                base = StructType.fromJson(json.loads(snap.schema_json))
-                # name->type sets (parquet + explicit-schema read matches
-                # by NAME, so column order is harmless; nullability is
-                # advisory in parquet and Spark frames flip it freely)
-                shape = lambda st: sorted(  # noqa: E731
-                    ((f.name, f.dataType) for f in st.fields),
-                    key=lambda t: t[0],
-                )
-                if shape(df.schema) != shape(base):
-                    self._drop_data(entry["dir"])
-                    raise ValueError(
-                        "append frame schema diverges from the table's "
-                        f"recorded schema: table {shape(base)}, frame "
-                        f"{shape(df.schema)}"
-                    )
-            version = snap.version + 1
-            payload = {
-                "version": version,
-                "op": "append",
-                "read_version": snap.version,
-                "add": [entry],
-                "remove": [],
-                "schema": evolved_json or snap.schema_json or schema_json,
-                "ts": time.time(),
-                "writer": f"{os.getpid()}-{uuid.uuid4().hex[:8]}",
-            }
-            attempts += 1
-            if self._publish(version, payload):
-                self._maybe_checkpoint(self.snapshot(version))
-                return version
-        raise CommitConflict(
-            f"lost {max_retries} optimistic commits on {self.path} (append)"
+        return self._commit_loop(
+            "append", build, max_retries,
+            rebase_safe=lambda ours, winner: True,  # a blind insert
+            on_stale=_keep, schema_json=own_json,
+            schema_from=lambda: state["schema"],
         )
 
     def overwrite(self, df: DataFrame, stats_col: str | None = None,
@@ -644,29 +609,27 @@ class TxnTable:
         """Full-table replace (the reference's seed-reset shape, S9).
         The replacement data is snapshot-independent, so a lost race
         only re-runs the cheap `build` (recomputing the remove list
-        against the fresh snapshot) — never the data write."""
+        against the fresh snapshot) — never the data write.  It never
+        rebases: the remove list must cover every concurrent commit."""
         entry = self._write_data(df, stats_col)
         checked: set[str] = set()
 
         def build(snap: Snapshot):
-            cfp = json.dumps(snap.constraints, sort_keys=True)
-            if snap.constraints and cfp not in checked:
+            if snap.constraints:
                 try:
                     self._check_constraints(
-                        self._read_dirs([entry["dir"]], None), snap.constraints
+                        self._read_dirs([entry["dir"]], None),
+                        snap.constraints,
+                        checked,
                     )
                 except ConstraintViolation:
                     self._drop_data(entry["dir"])
                     raise
-                checked.add(cfp)
             return [entry], snap.dirs
 
-        def rebase_safe(ours, winner) -> bool:
-            return False  # the remove list must cover every concurrent commit
-
         return self._commit_loop(
-            "overwrite", build, rebase_safe, max_retries,
-            schema_json=df.schema.json(),
+            "overwrite", build, max_retries,
+            on_stale=_keep, schema_json=df.schema.json(),
         )
 
     def last_txn(self, app: str) -> int | None:
@@ -700,8 +663,8 @@ class TxnTable:
         counter and REBASE without re-reading or re-writing anything;
         overlapping writers re-run against the fresh snapshot —
         serializability the lock-sentinel lane approximated with a
-        global mutex (streaming/ingest.py:166) falls out of the log
-        order instead.
+        global mutex (``_path_lock`` in streaming/ingest.py) falls out
+        of the log order instead.
 
         `txn=(app, id)`: exactly-once marker — if the log already
         holds a commit by `app` with a transaction id >= `id`, the
@@ -742,29 +705,21 @@ class TxnTable:
             s = entry.get("stats")
             if s is None or u is None or s.get("col") != k0:
                 return True  # no stats -> cannot prune (correct, unskipped)
-            try:
-                return not (s["max"] < u["min"] or s["min"] > u["max"])
-            except TypeError:  # mixed stat types (schema drift): don't prune
-                return True
+            return _range_overlaps(s, u["min"], u["max"])
 
-        state: dict = {}
+        state: dict = {"checked": set()}
 
         def build(snap: Snapshot):
-            cfp = json.dumps(snap.constraints, sort_keys=True)
-            if snap.constraints and cfp not in state.setdefault("checked", set()):
-                # violating update rows abort before any rewrite; the
-                # orphaned update directory is vacuum's to reclaim
-                # (same contract as the schema-mismatch aborts below)
-                self._check_constraints(upd_df, snap.constraints)
-                state["checked"].add(cfp)
+            # violating update rows abort before any rewrite; the
+            # orphaned update directory is vacuum's to reclaim (same
+            # contract as the schema-mismatch aborts below)
+            self._check_constraints(upd_df, snap.constraints, state["checked"])
             touched = [d for d in snap.dirs if overlaps(snap.files[d])]
             state["touched"] = set(touched)
             if snap.schema_json is not None:
-                from pyspark.sql.types import StructType
-
-                base = StructType.fromJson(json.loads(snap.schema_json))
+                base = _struct(snap.schema_json)
                 base_names = {f.name for f in base.fields}
-                upd_names = {f.name for f in upd_df.schema.fields}
+                upd_names = set(upd_df.columns)
                 missing = [f.name for f in base.fields if f.name not in upd_names]
                 if missing:
                     # this merge REPLACES whole rows: an update frame
@@ -784,14 +739,11 @@ class TxnTable:
                         "evolve_schema=True to add them"
                     )
                 if evolve_schema:
-                    # evolved schema = Spark's own union promotion of
-                    # (target, updates) — shared columns may widen (e.g.
-                    # int→long); untouched directories' narrower files
-                    # read back widened (Spark 4 parquet type widening)
-                    empty_tgt = self.spark.createDataFrame([], base)
-                    state["schema_json"] = empty_tgt.unionByName(
-                        upd_df, allowMissingColumns=True
-                    ).schema.json()
+                    # untouched directories' narrower files read back
+                    # widened (Spark 4 parquet type widening)
+                    state["schema_json"] = self._evolved_schema(
+                        snap.schema_json, upd_df
+                    )
             if touched:
                 tgt = self._read_dirs(touched, snap.schema_json)
                 kept = tgt.join(
@@ -803,38 +755,21 @@ class TxnTable:
             else:
                 out = upd_df
             entry = self._write_data(out, k0)
-            if snap.version < 0:
-                # first commit defines the schema
-                return [entry], []
             return [entry], touched
 
         def rebase_safe(ours, winner) -> bool:
             """The winning commit is invisible to this rewrite iff it
             neither removed anything we read/removed nor added data in
             our key range (their keys can then not collide with ours)."""
-            _, our_remove = ours
             if set(winner.get("remove", [])) & state["touched"]:
                 return False
-            for a in winner.get("add", []):
-                s = a.get("stats")
-                if s is None or u is None or s.get("col") != k0:
-                    return False
-                try:
-                    if not (s["max"] < u["min"] or s["min"] > u["max"]):
-                        return False
-                except TypeError:
-                    return False
-            return True
-
-        def on_stale(add):
-            for a in add:  # the rewrite was built against a stale snapshot
-                self._drop_data(a["dir"])
+            return not any(overlaps(a) for a in winner.get("add", []))
 
         try:
             return self._commit_loop(
-                "merge", build, rebase_safe, max_retries,
-                on_stale=on_stale, schema_json=updates.schema.json(),
-                txn=txn, schema_from=lambda: state.get("schema_json"),
+                "merge", build, max_retries, rebase_safe=rebase_safe,
+                schema_json=updates.schema.json(), txn=txn,
+                schema_from=lambda: state.get("schema_json"),
             )
         finally:
             self._drop_data(upd_entry["dir"])  # staging only, never referenced
@@ -849,6 +784,7 @@ class TxnTable:
         live directories that may hold matching rows, without those
         rows (the reference's delete flows are tiny demo tables,
         db.py:92-99; this is the Delta file-skipping DELETE shape).
+        A delete reads table state, so it never rebases.
 
         ``prune_hint=(col, lo, hi)``: the caller asserts every
         predicate-TRUE row satisfies lo <= col <= hi — the contract a
@@ -872,22 +808,15 @@ class TxnTable:
             # hint may prune on ANY clustered column, not just the first
             s = (entry.get("stats_multi") or {}).get(col)
             if s is None:
-                s1 = entry.get("stats")
-                if s1 is None or s1.get("col") != col:
+                s = entry.get("stats")
+                if s is None or s.get("col") != col:
                     return True  # no stats -> cannot prune (unskipped)
-                s = s1
-            try:
-                return not (s["max"] < lo or s["min"] > hi)
-            except TypeError:  # mixed stat types: don't prune
-                return True
-
-        state: dict = {}
+            return _range_overlaps(s, lo, hi)
 
         def build(snap: Snapshot):
             if snap.version < 0:
                 raise ValueError("delete_where on an empty table")
             touched = [d for d in snap.dirs if overlaps(snap.files[d])]
-            state["touched"] = set(touched)
             if not touched:
                 return [], []  # provably nothing to delete: no-op commit
             tgt = self._read_dirs(touched, snap.schema_json)
@@ -910,16 +839,25 @@ class TxnTable:
             entry = self._write_data(out, stats_col)
             return [entry], touched
 
-        def rebase_safe(ours, winner) -> bool:
-            return False  # a delete reads table state
+        return self._commit_loop("delete", build, max_retries)
 
-        def on_stale(add):
-            for a in add:
-                self._drop_data(a["dir"])
+    def _compact(self, method: str, part: str, assign, cols: list[str],
+                 multi: bool, target_dirs: int | None, max_retries: int) -> int:
+        """Shared body of :meth:`optimize` and :meth:`optimize_zorder`:
+        rewrite the whole live table as the buckets ``assign(df, k)``
+        tags in column `part`.  Compaction reads the whole table, so
+        it never rebases."""
 
-        return self._commit_loop(
-            "delete", build, rebase_safe, max_retries, on_stale=on_stale
-        )
+        def build(snap: Snapshot):
+            if snap.version < 0:
+                raise ValueError(f"{method} on an empty table")
+            df = self._read_dirs(snap.dirs, snap.schema_json)
+            if part in df.columns:
+                raise ValueError(f"column name {part} is reserved by {method}()")
+            k = target_dirs or max(1, min(len(snap.dirs), 32))
+            return self._write_bucketed(assign(df, k), part, cols, multi), snap.dirs
+
+        return self._commit_loop("optimize", build, max_retries)
 
     def optimize(
         self,
@@ -932,29 +870,18 @@ class TxnTable:
         re-clustering pass that restores data skipping after merges
         and appends have blurred the key ranges (every key-confined
         MERGE afterwards rewrites O(1) directories again).  One
-        repartitionByRange write job regardless of target count.  At
+        repartitionByRange write job regardless of target count:
+        each partition holds a disjoint slice of the key's order, so
+        the per-directory stats are disjoint by construction.  At
         100 TB this is the periodic background compaction; between
         runs correctness never depends on it — pruning just degrades
         toward rewrite-everything."""
-        state: dict = {}
-
-        def build(snap: Snapshot):
-            if snap.version < 0:
-                raise ValueError("optimize on an empty table")
-            df = self._read_dirs(snap.dirs, snap.schema_json)
-            k = target_dirs or max(1, min(len(snap.dirs), 32))
-            entries = self._write_clustered(df, cluster_col, k)
-            state["root"] = entries[0]["dir"].rsplit("/__bucket=", 1)[0]
-            return entries, snap.dirs
-
-        def rebase_safe(ours, winner) -> bool:
-            return False  # compaction reads the whole table
-
-        def on_stale(add):
-            self._drop_data(state["root"])  # one physical root for all buckets
-
-        return self._commit_loop(
-            "optimize", build, rebase_safe, max_retries, on_stale=on_stale
+        return self._compact(
+            "optimize", "__bucket",
+            lambda df, k: df.repartitionByRange(k, F.col(cluster_col)).withColumn(
+                "__bucket", F.spark_partition_id()
+            ),
+            [cluster_col], False, target_dirs, max_retries,
         )
 
     def optimize_zorder(
@@ -974,25 +901,12 @@ class TxnTable:
         dimension — the multi-tenant forget shape: cluster on
         (tenant, time) and both "forget tenant X" and "expire before
         T" deletes stay O(overlapping directories)."""
-        state: dict = {}
+        from market_insights_app_spark.operators.layout import zorder_assign
 
-        def build(snap: Snapshot):
-            if snap.version < 0:
-                raise ValueError("optimize_zorder on an empty table")
-            df = self._read_dirs(snap.dirs, snap.schema_json)
-            k = target_dirs or max(1, min(len(snap.dirs), 32))
-            entries = self._write_zordered(df, cols, k)
-            state["root"] = entries[0]["dir"].rsplit("/__file=", 1)[0]
-            return entries, snap.dirs
-
-        def rebase_safe(ours, winner) -> bool:
-            return False  # compaction reads the whole table
-
-        def on_stale(add):
-            self._drop_data(state["root"])  # one physical root for all files
-
-        return self._commit_loop(
-            "optimize", build, rebase_safe, max_retries, on_stale=on_stale
+        return self._compact(
+            "optimize_zorder", "__file",
+            lambda df, k: zorder_assign(df, cols, k),
+            cols, True, target_dirs, max_retries,
         )
 
     def add_constraint(
@@ -1024,10 +938,7 @@ class TxnTable:
             return [], []
 
         return self._commit_loop(
-            "set_constraint",
-            build,
-            lambda ours, winner: False,
-            max_retries,
+            "set_constraint", build, max_retries,
             extra=lambda: {"constraints": state["set"]},
         )
 
@@ -1044,10 +955,7 @@ class TxnTable:
             return [], []
 
         return self._commit_loop(
-            "set_constraint",
-            build,
-            lambda ours, winner: False,
-            max_retries,
+            "set_constraint", build, max_retries,
             extra=lambda: {"constraints": state["set"]},
         )
 
@@ -1060,7 +968,8 @@ class TxnTable:
         disk: they are log-referenced, so vacuum kept them for as long
         as the log retains the version).  The restore is itself a new
         commit, so it is undoable by another restore and visible in
-        ``history()`` — nothing is rewritten, nothing is lost.
+        ``history()`` — nothing is rewritten, nothing is lost.  It
+        never rebases: a restore replaces the whole live set.
 
         Fails loudly when ``version`` is below a ``truncate_history``
         cutoff (its snapshot is no longer resolvable — and after a
@@ -1069,18 +978,11 @@ class TxnTable:
         target = self.snapshot(version)  # raises if truncated/unknown
         if target.version < 0:
             raise ValueError("cannot restore an empty table state")
-
-        def build(snap: Snapshot):
-            return list(target.files.values()), snap.dirs
-
-        def rebase_safe(ours, winner) -> bool:
-            return False  # a restore replaces the whole live set
-
         return self._commit_loop(
             "restore",
-            build,
-            rebase_safe,
+            lambda snap: (list(target.files.values()), snap.dirs),
             max_retries,
+            on_stale=_keep,  # the adds are live directories of `version`
             schema_from=lambda: target.schema_json,
         )
 
@@ -1135,14 +1037,12 @@ class TxnTable:
                 pass  # concurrent truncate already dropped it
         # checkpoints strictly below the covering one reference only
         # dropped history — remove them so vacuum can reclaim
-        for f in os.listdir(log):
-            if f.startswith("checkpoint-") and f.endswith(".json"):
-                cv = int(f[len("checkpoint-") : -len(".json")])
-                if cv < cutoff:
-                    try:
-                        os.unlink(os.path.join(log, f))
-                    except FileNotFoundError:
-                        pass
+        for cv, f in self._checkpoints().items():
+            if cv < cutoff:
+                try:
+                    os.unlink(os.path.join(log, f))
+                except FileNotFoundError:
+                    pass
         return dropped
 
     def vacuum(self, retain_seconds: float = 3600.0) -> list[str]:
@@ -1151,28 +1051,25 @@ class TxnTable:
         in-flight writer's just-written-not-yet-committed directory
         safe — the same retention contract as Delta's VACUUM.  Note
         referenced = ANY commit still in the log, so time travel keeps
-        working for every listed version; truncating old log entries
-        (and with them old versions) is a separate policy decision this
-        sandbox never needs."""
-        referenced: set[str] = set()
-        for c in self.history():
-            for a in c.get("add", []):
-                # an optimize commit references per-bucket SUBdirs of one
-                # physical root — protect the whole root directory
-                referenced.add("/".join(a["dir"].split("/")[:2]))
+        working for every listed version; dropping old versions so
+        their data can be reclaimed is the separate, explicit
+        :meth:`truncate_history` step."""
+        # an optimize commit references per-bucket SUBdirs of one
+        # physical root — protect the whole root directory
+        referenced = {
+            _data_root(a["dir"]) for c in self.history() for a in c.get("add", [])
+        }
         # after truncate_history() a directory may be referenced ONLY by
         # the covering checkpoint (its adding commit is gone) — protect
         # everything any surviving checkpoint still maps
         log = self._log_path()
-        for f in os.listdir(log):
-            if f.startswith("checkpoint-") and f.endswith(".json"):
-                try:
-                    with open(os.path.join(log, f)) as fh:
-                        cp = json.load(fh)
-                except (OSError, json.JSONDecodeError):
-                    continue
-                for d in cp.get("files", {}):
-                    referenced.add("/".join(d.split("/")[:2]))
+        for f in self._checkpoints().values():
+            try:
+                with open(os.path.join(log, f)) as fh:
+                    cp = json.load(fh)
+            except (OSError, json.JSONDecodeError):
+                continue
+            referenced.update(_data_root(d) for d in cp.get("files", {}))
         dropped = []
         data_root = os.path.join(self.path, DATA_DIR)
         now = time.time()
@@ -1186,8 +1083,8 @@ class TxnTable:
             shutil.rmtree(full, ignore_errors=True)
             dropped.append(rel)
         # reclaim orphaned log temp files (a writer that died mid-publish)
-        for f in os.listdir(self._log_path()):
-            full = os.path.join(self._log_path(), f)
+        for f in os.listdir(log):
+            full = os.path.join(log, f)
             if f.startswith(".tmp-") and now - os.path.getmtime(full) >= retain_seconds:
                 try:
                     os.unlink(full)

@@ -22,7 +22,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    os.environ["SPARK_GRAFT_CACHE_TABLES"] = "1"
     from market_insights_app_spark.plans.registry import QUERIES
     from market_insights_app_spark.session import get_spark
     from market_insights_app_spark.sources.tables import load_table
@@ -36,7 +35,7 @@ def main() -> None:
         ).save()
         return time.perf_counter() - t0
 
-    # warm: JVM, codegen on an unrelated plan, hot-table cache
+    # warm: JVM, codegen on an unrelated plan, one scan per table
     run("recent_n_tail")
     for t in ("events", "lineitem", "orders", "customer", "nation",
               "region", "documents", "embeddings"):

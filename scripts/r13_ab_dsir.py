@@ -11,7 +11,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ["SPARK_GRAFT_CACHE_TABLES"] = "1"
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
@@ -85,8 +84,8 @@ def main() -> None:
     def reset_cache():
         # both arms persist() intermediate tables under identical plans,
         # so a shared warm SQL cache would mask the build-time delta —
-        # drop EVERYTHING, then re-warm the base-table cache (which the
-        # bench holds warm) outside the timer.
+        # drop EVERYTHING, then re-scan the base table outside the
+        # timer.
         spark._jsparkSession.sharedState().cacheManager().clearCache()
         load_table(spark, sf_dir, "documents").count()
 

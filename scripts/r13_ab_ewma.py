@@ -11,7 +11,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ["SPARK_GRAFT_CACHE_TABLES"] = "1"
 
 from pyspark.sql import Column, functions as F  # noqa: E402
 from pyspark.sql.window import WindowSpec  # noqa: E402

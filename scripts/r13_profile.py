@@ -13,7 +13,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ["SPARK_GRAFT_CACHE_TABLES"] = "1"
 
 from market_insights_app_spark.plans.registry import QUERIES  # noqa: E402
 from market_insights_app_spark.session import get_spark  # noqa: E402
@@ -34,7 +33,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(app_name="mias-r13-profile", cpus=cpus)
-    # same warmup as bench.py: JVM + codegen + hot-table cache
+    # same warmup as bench.py: JVM + codegen + one scan per table
     QUERIES["prices_filter_range_limit"](spark, sf_dir).write.mode(
         "overwrite"
     ).format("noop").save()

@@ -1,6 +1,6 @@
 """Cold-process per-query measurement (r13 verdict #6): reproduce the
 driver bench's shape — fresh JVM, bench session config, untimed warmup
-query + hot-table cache materialization, then best-of-N noop-sink runs
+query + one scan of every table, then best-of-N noop-sink runs
 per named query — so one-time costs (buffer-pool touches, checkpoint
 writes, Arrow lane init) that a warm interleaved A/B hides are PAID and
 measured, exactly as the driver's PERF comparison pays them.
@@ -32,7 +32,6 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
-    os.environ["SPARK_GRAFT_CACHE_TABLES"] = "1"
     from market_insights_app_spark.plans.registry import QUERIES
     from market_insights_app_spark.session import get_spark
     from market_insights_app_spark.sources.tables import load_table
@@ -46,7 +45,7 @@ def main() -> None:
         df.write.mode("overwrite").format("noop").save()
         return time.perf_counter() - t0
 
-    # bench.py's untimed warmup: JVM + codegen + hot-table cache
+    # bench.py's untimed warmup: JVM + codegen + one scan per table
     run("prices_filter_range_limit")
     for t in ("events", "lineitem", "orders", "customer", "nation", "region",
               "documents", "embeddings"):

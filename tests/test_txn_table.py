@@ -245,14 +245,125 @@ def test_concurrent_overlapping_merges_last_committer_wins(spark, tmp_path):
         assert got[100 + ord(tag[0])] == tag  # no writer's insert lost
 
 
-def test_conflict_exhaustion_raises(spark, table, monkeypatch):
-    table.append(_mk(spark, [(1, "a")]), stats_col="id")
-    # force every publish to lose: pre-create the next N log entries
+_WRITE_OPS = {
+    "append": lambda t, s: t.append(_mk(s, [(5, "e")]), "id", max_retries=3),
+    "merge": lambda t, s: t.merge(_mk(s, [(1, "x")]), ["id"], max_retries=3),
+    "overwrite": lambda t, s: t.overwrite(_mk(s, [(9, "z")]), max_retries=3),
+    "delete_where": lambda t, s: t.delete_where(F.col("id") == 1, max_retries=3),
+    "optimize": lambda t, s: t.optimize("id", max_retries=3),
+    "optimize_zorder": lambda t, s: t.optimize_zorder(["id"], max_retries=3),
+    "add_constraint": lambda t, s: t.add_constraint("pos", "id > 0", max_retries=3),
+    "restore": lambda t, s: t.restore(0, max_retries=3),
+}
+
+
+@pytest.mark.parametrize("op", list(_WRITE_OPS))
+def test_conflict_exhaustion_raises(spark, table, monkeypatch, op):
+    """Every write op gives up with CommitConflict after exactly
+    `max_retries` lost publishes, and commits nothing."""
+    table.append(_mk(spark, [(1, "a"), (2, "b")]), stats_col="id")
+    published: list[int] = []
+    # force every publish to lose
     monkeypatch.setattr(
-        TxnTable, "_publish", lambda self, v, p: False, raising=True
+        TxnTable, "_publish", lambda self, v, p: published.append(v) or False,
+        raising=True,
     )
     with pytest.raises(CommitConflict):
-        table.merge(_mk(spark, [(1, "x")]), ["id"], max_retries=3)
+        _WRITE_OPS[op](table, spark)
+    assert published == [1, 1, 1]
+    assert [c["op"] for c in table.history()] == ["append"]
+
+
+_REAL_PUBLISH = TxnTable._publish
+
+
+def _inject_winner(monkeypatch, commit):
+    """Make the next publish lose: `commit()` runs first and takes the
+    version the writer read."""
+    fired: list[int] = []
+
+    def publish(self, v, p):
+        if not fired:
+            fired.append(v)
+            commit()
+        return _REAL_PUBLISH(self, v, p)
+
+    monkeypatch.setattr(TxnTable, "_publish", publish)
+
+
+def test_append_race_revalidates_against_winning_constraint(
+    spark, table, monkeypatch
+):
+    """A constraint that lands between an append's snapshot and its
+    publish must be checked, not rebased over: the append fails, and
+    neither its commit nor its data directory survives."""
+    from market_insights_app_spark.storage.txnlog import ConstraintViolation
+
+    table.append(_mk(spark, [(1, "a")]), stats_col="id")
+    data = os.path.join(table.path, "data")
+    dirs_before = set(os.listdir(data))
+    _inject_winner(
+        monkeypatch,
+        lambda: TxnTable(spark, table.path).add_constraint("pos_id", "id > 0"),
+    )
+    with pytest.raises(ConstraintViolation, match="pos_id"):
+        table.append(_mk(spark, [(-5, "x")]), stats_col="id")
+    assert [c["op"] for c in table.history()] == ["append", "set_constraint"]
+    assert set(os.listdir(data)) == dirs_before
+    assert _rows(table.read()) == [(1, "a")]
+
+
+@pytest.mark.parametrize("evolve", [False, True])
+def test_append_race_rebuilds_against_winning_schema(
+    spark, table, monkeypatch, evolve
+):
+    """A schema-widening append wins the version a narrower append
+    read.  The loser must rebuild against the winner's schema, never
+    rebase and stamp its own narrower one over it: a strict append now
+    diverges and fails loudly (its data directory dropped); an
+    evolve_schema append commits under the winner's wider schema."""
+    table.append(_mk(spark, [(1, "a")]), stats_col="id")
+    wide = spark.createDataFrame([(2, "b", 0.5)], "id INT, val STRING, score DOUBLE")
+    _inject_winner(
+        monkeypatch,
+        lambda: TxnTable(spark, table.path).append(wide, evolve_schema=True),
+    )
+    narrow = _mk(spark, [(3, "c")])
+    if evolve:
+        assert table.append(narrow, stats_col="id", evolve_schema=True) == 2
+        expect = {1: None, 2: 0.5, 3: None}
+    else:
+        with pytest.raises(ValueError, match="diverges"):
+            table.append(narrow, stats_col="id")
+        expect = {1: None, 2: 0.5}
+    assert table.read().columns == ["id", "val", "score"]
+    assert {r.id: r.score for r in table.read().collect()} == expect
+    live = {d.split("/")[1] for d in table.snapshot().dirs}
+    assert set(os.listdir(os.path.join(table.path, "data"))) == live
+
+
+def test_checkpoint_is_fsynced_before_it_is_visible(spark, table, monkeypatch):
+    """A commit landing on a checkpoint boundary fsyncs both files it
+    links into the log: a torn checkpoint after an OS crash would make
+    every later snapshot() fail to parse it."""
+    import market_insights_app_spark.storage.txnlog as txnlog
+
+    for k in range(3):
+        table.append(_mk(spark, [(k, "v")]), stats_col="id")
+    synced: list[int] = []
+    real_fsync = txnlog.os.fsync
+
+    def fsync(fd):
+        synced.append(fd)
+        real_fsync(fd)
+
+    monkeypatch.setattr(txnlog.os, "fsync", fsync)
+    # interval=4: version 3 writes checkpoint 3
+    assert table.append(_mk(spark, [(3, "v")]), stats_col="id") == 3
+    assert len(synced) == 2
+    assert f"checkpoint-{3:020d}.json" in os.listdir(
+        os.path.join(table.path, "_txn_log")
+    )
 
 
 def test_vacuum_reclaims_only_unreferenced_old_dirs(spark, table):
@@ -298,6 +409,20 @@ def test_optimize_restores_clustering(spark, table):
     assert len(table.history()[-1]["remove"]) == 1  # pruning restored
     assert table.history()[-2]["op"] == "optimize"
     assert _rows(table.read(version=v - 1)) == before  # time travel intact
+
+
+@pytest.mark.parametrize(
+    "col,run",
+    [
+        ("__bucket", lambda t: t.optimize("id")),
+        ("__file", lambda t: t.optimize_zorder(["id"])),
+    ],
+)
+def test_optimize_rejects_reserved_column(spark, table, col, run):
+    table.append(spark.createDataFrame([(1, 0)], f"id INT, {col} INT"), "id")
+    with pytest.raises(ValueError, match=f"column name {col} is reserved"):
+        run(table)
+    assert [c["op"] for c in table.history()] == ["append"]
 
 
 def test_vacuum_protects_optimize_buckets(spark, table):
